@@ -1,30 +1,21 @@
-"""Distributed EXACT quantiles (DuckDB quantile_cont semantics) without
-a global sort, a per-group sort of raw rows, or a value-map aggregate.
+"""Distributed EXACT quantiles — DuckDB `quantile_cont` or, with a weight
+column, the weighted inverted-CDF quantile — without a global sort, a
+per-group sort of raw rows, a value-map aggregate or a driver action.
 
-Why this exists (round 12): Spark's exact `percentile` aggregate buffers
-a value→count hash map PER MAP TASK — 2.4M mostly-distinct doubles OOM'd
-a plain 1 GiB session — and the row_number-over-global-window alternative
-funnels every row through ONE sort task, which the driver-contract sweep
-session (hundreds of prior queries' memory pressure) also failed to give
-pages to. Both are anti-patterns at 100 TB for the same reason: they
-concentrate the full value set in one place.
+One selection serves both (`exact_quantile_by_group`): a codegen
+histogram over logarithmic buckets brackets the target rank, then one
+exact pass over the rows inside the bracket resolves it. The shape was
+chosen against measured failures of its alternatives:
 
-Round 13 replaced the original two-phase range-histogram selection after
-measuring its failure mode in production: range bucketing by [min, max]
-collapses under heavy tails (81% of Theil–Sen's 2.9M slopes landed in one
-of 1024 cells, silently restoring the single-task multimillion-row sort);
-the replacement bracketed the target rank with a Greenwald–Khanna sketch
-(`percentile_approx`). Round 14 retired the sketch too: GK is an
-IMPERATIVE (non-codegen) aggregate whose per-row update cost was the
-operator's measured wall floor (~1.4 s over 2.9M cached slopes, nearly
-independent of `accuracy`), and it forced a second scan of the input for
-the band pass. The current selection is pure codegen relational algebra —
-tie-collapse to (group, value, count) cells, ONE narrow range shuffle of
-the cells, and a two-phase distributed rank (partition-local cumulative
-counts + per-group partition offsets, the add_surrogate_key_scalable
-pattern expressed without any driver action) — exact by construction,
-single scan of the input, no imperative aggregate anywhere in the plan.
-See `exact_quantile_by_group` for the full design.
+- Spark's exact `percentile` buffers a value→count map per map task —
+  2.4M mostly-distinct doubles OOM'd a plain 1 GiB session — and a
+  global row_number window funnels every row through one sort task;
+- an equi-width [min, max] histogram collapses under heavy tails (81% of
+  Theil–Sen's 2.9M slopes landed in one of 1024 cells, restoring the
+  single-task sort);
+- a Greenwald–Khanna bracket (`percentile_approx`) is an imperative,
+  non-codegen aggregate whose per-row update was the operator's wall
+  floor (~1.4 s over the slope set), and it has no weighted form.
 """
 
 from __future__ import annotations
@@ -34,57 +25,18 @@ from pyspark.sql import functions as F
 
 
 def exact_median_1row(
-    df: DataFrame,
-    col: str,
-    out: str,
-    *,
-    buckets: int = 1024,
-    max_sort_rows: int = 100_000,
-    persist_input: bool = True,
-    accuracy: int = 10_000,
+    df: DataFrame, col: str, out: str, *, persist_input: bool = True
 ) -> DataFrame:
     """1-row frame (<out>,) holding the exact median of `df[col]`.
 
     NULLs are ignored (SQL aggregate semantics); an empty/all-NULL input
-    yields a 1-row frame with a NULL median. The result column is the
-    only output column, so callers can crossJoin it as a scalar (the
-    repo's provable-1-row broadcast pattern).
-
-    Since round 13 this is the constant-group case of
-    `exact_quantile_by_group` (see that docstring for the
-    exponent-histogram bracketed selection and its lineage). The result interpolation (lo + frac*(hi - lo), frac =
-    0.5) matches DuckDB's quantile_cont(0.5) within 1 ulp of the old
-    (lo + hi)/2 form; both land inside every oracle's round()/isclose
-    envelope. Since r14 the selection is LAZY (a scoped-persist leaf —
-    it runs inside the first consuming action and is shared by every
-    later one); the returned frame is that leaf plus a 1-row left join.
+    yields a NULL median. The keys=[] aggregate on top makes the frame
+    PROVABLY one row, so callers crossJoin it as a scalar without the
+    plan advisor's cartesian-product gate firing — its physical cost is
+    a first() over the single cached row of the selection.
     """
-    base = df.select(F.lit(1).alias("__one"), F.col(col).alias("__m_in"))
-    med = exact_quantile_by_group(
-        base,
-        ["__one"],
-        "__m_in",
-        out,
-        p=0.5,
-        accuracy=accuracy,
-        buckets=buckets,
-        max_sort_rows=max_sort_rows,
-        persist_input=persist_input,
-    )
-    # grouped semantics drop empty/all-NULL input entirely; re-anchor on a
-    # literal 1-row frame so the scalar contract (always exactly 1 row,
-    # NULL when undefined) survives. The final keys=[] aggregate matters:
-    # it makes the result PROVABLY one row again (the checkpoint leaf
-    # underneath has no such guarantee in its plan), so callers may
-    # crossJoin it as a scalar without the plan advisor's
-    # cartesian-product gate firing — the physical cost is a first() over
-    # a single cached row.
-    one = df.sparkSession.range(1).select(F.lit(1).alias("__one"))
-    return (
-        one.join(med, "__one", "left")
-        .agg(F.first(F.col(out).cast("double")).alias(out))
-    )
-
+    med = exact_quantile_by_group(df, [], col, out, persist_input=persist_input)
+    return med.agg(F.first(out).alias(out))
 
 
 def exact_quantile_by_group(
@@ -94,120 +46,96 @@ def exact_quantile_by_group(
     out: str,
     *,
     p: float = 0.5,
-    accuracy: int = 10_000,
-    buckets: int | None = None,
-    max_sort_rows: int | None = None,
+    weight: str | None = None,
     persist_input: bool = False,
 ) -> DataFrame:
-    """Per-group EXACT continuous quantile — DuckDB `quantile_cont(col, p)
-    GROUP BY keys` semantics — in three codegen passes, with no per-group
-    sort of raw rows, no value-map aggregate, and (since round 14) no
-    imperative sketch aggregate anywhere in the plan.
+    """Per-group EXACT quantile of `col`; `keys=[]` is one group.
 
-    Why not the predecessors:
-    - one-shot range histogram (r12): [min, max] equi-width bucketing
-      collapses under heavy tails — 81% of Theil–Sen's 2.9M slopes landed
-      in ONE of 1024 cells, silently restoring the single-task
-      multimillion-row sort;
-    - GK sketch bracket (r13): correct and deterministic, but
-      `percentile_approx` is an imperative (non-codegen) aggregate whose
-      per-row update cost was the measured wall floor (~1.4 s over the
-      2.9M-row slope set, nearly independent of `accuracy`);
-    - full tie-collapsed distributed rank (tried first in r14): exact and
-      driver-free, but on a mostly-distinct column "cells" ≈ rows, so the
-      proxy set itself had to be cached, range-shuffled, sorted and
-      windowed at data size — measured SLOWER than the GK floor it
-      replaced (Theil–Sen 3.4 → 5.3 s). Rejected.
+    - `weight=None`: DuckDB `quantile_cont(col, p) GROUP BY keys` — the
+      order statistics at 1-based ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1,
+      blended by frac = (n−1)p − ⌊(n−1)p⌋.
+    - `weight=<column>`: the inverted-CDF weighted quantile — the
+      smallest value whose cumulative weight reaches p·W (numpy's
+      `method='inverted_cdf'`; the weighted median at p = 0.5). Rows
+      with a NULL or ≤ 0 weight are ignored. Weights are summed as
+      decimal(38,6) — exact and order-independent — so the boundary
+      test cum ≥ p·W cannot flip on float summation order between this
+      plan and a DuckDB window oracle; use p values exact in
+      decimal(12,10) (0.5, 0.25, 0.9, ...).
 
-    The selection here brackets the target rank with a FIXED-ROUND
-    counted histogram — every pass an ordinary codegen hash aggregate —
-    then resolves the exact order statistics from tie-collapsed cells
-    inside the bracket (the r13 band machinery, unchanged):
+    Both modes sum a "mass" per run of rows (row count, or weight) and
+    differ only in the rank targets and the final interpolation:
 
-    1. round 1 — EXPONENT buckets: b = sign·(2048 + floor(log2|v|)), a
-       data-independent, deterministic, monotone partition of the double
-       line (≈6k buckets spanning subnormals to infinities; NaN pinned
-       above +inf to match Spark's NaN-largest ordering). Logarithmic
-       buckets need no prior [min, max] pass and cannot be stretched by
-       outliers — a heavy tail lands in its own magnitude buckets, which
-       is exactly where the r12 equi-width form collapsed. One
-       groupBy(group, bucket).agg(count, min, max) plus a ≤6k-cell
-       per-group window locate the bucket span covering both target
-       ranks ⌊(n−1)p⌋+1 and ⌈(n−1)p⌉+1, the exact count below it, and n
-       itself — all in the same pass.
-    2. round 2 — ONE equi-width split (4096 cells) of the round-1
-       bracket's OBSERVED [lo, hi] (actual data values, so the next
-       filter is exact — the r13 advisory's narrowing rule). The round-1
-       bracket spans at most two adjacent binades, so after this split
-       the bracket width is ≤ ~|lo|·2⁻¹¹: a fixed RELATIVE window no
-       distribution can stretch. Mass concentration inside it costs
-       band CELLS (ties collapse), never correctness.
-    3. band selection (r13, verbatim): rows in [lo, hi] tie-collapse to
-       (value, count) cells, below-band rows to one counter cell per
-       group; a cumulative window over the cells locates the two order
-       statistics, and the result interpolates lo + frac·(hi − lo) with
-       frac = (n−1)p − ⌊(n−1)p⌋ — DuckDB quantile_cont's exact formula,
-       bit-identical to the r12/r13 paths.
+    1. bracket — ONE groupBy(group, bucket) over sign/exponent/mantissa
+       buckets (below) summing mass, min and max; a per-group window
+       over the populated buckets yields the group's total mass and the
+       mass before each bucket, and the bucket span covering both targets
+       gives the bracket [a, b] as OBSERVED data values.
+    2. band — rows below [a, b] merge into one counter cell per group,
+       rows inside tie-collapse to (value, mass) cells, rows above are
+       dropped; a cumulative window over the cells picks the first value
+       whose cumulative mass reaches each target.
 
-    A malfunctioning bracket cannot produce a silently wrong answer: the
-    final projection runs through `assert_true(both stats found)`, so a
-    coverage miss fails the job loudly. `accuracy`, `buckets` and
-    `max_sort_rows` are accepted for call-site compatibility with the
-    retired forms and ignored. `persist_input` persists the (group,
-    value)-projected input once for the three passes — leave it False
-    when regenerating the input is cheaper than caching it (the r13
-    measurement on Theil–Sen's slope set still holds: three cheap
-    regenerations beat one 2.9M-row cache write).
+    A broken bracket cannot produce a silently wrong answer: the final
+    projection runs through `assert_true(both values found)`. Group keys
+    ride in a struct, so NULL keys keep GROUP BY semantics through the
+    band join (struct equality is null-safe). Result: `keys + [out]`, one
+    row per group with ≥ 1 qualifying row, returned as a LAZY
+    scoped-persist leaf: the selection runs inside the caller's first
+    action, later actions share it, and nested calls (Theil–Sen feeds one
+    median into another's input) stay small plans. `persist_input`
+    caches the projected input for the two passes — leave it False when
+    regenerating the input is cheaper than a cache write.
 
-    Group keys ride inside a packed struct so NULL key values keep SQL
-    GROUP BY semantics through the internal joins (struct equality is
-    null-safe per field). Result: `keys + [out]`, one row per group with
-    >= 1 non-NULL value; no qualifying groups → empty frame. The frame
-    is returned as a LAZY scoped-persist leaf — group-sized by
-    construction — so callers weave it into bigger plans without
-    re-running the selection (the cache materializes inline in their
-    first action and is shared by later ones), and nested calls
-    (Theil–Sen feeds one median's output into another's input) stay
-    ~10 plan nodes instead of compounding.
-
-    At 100 TB: all three passes are map-side-combined codegen aggregates
-    whose shuffles carry ≤ (groups × ~6k) histogram cells or the band's
-    tie-collapsed cells; the only per-group serial work is the ≤6k-cell
-    histogram windows and the final band-cell window.
+    At 100 TB both passes are map-side-combined codegen aggregates whose
+    shuffles carry ≤ groups × populated-bucket rows or the band's
+    tie-collapsed cells; the only per-group serial work is the two
+    windows over those.
     """
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"quantile p must be in [0,1], got {p}")
     from sri_spark.operators.caching import scoped_persist
 
-    vals = df.filter(F.col(col).isNotNull()).select(
+    keep = F.col(col).isNotNull()
+    cols = [
         F.struct(*[F.col(k) for k in keys]).alias("__g"),
         F.col(col).cast("double").alias("__v"),
-    )
+    ]
+    if weight is None:
+        mass = F.count("*")
+    else:
+        keep = keep & F.col(weight).isNotNull() & (F.col(weight) > 0)
+        cols.append(F.col(weight).cast("decimal(38,6)").alias("__w"))
+        mass = F.sum("__w")
+    vals = df.filter(keep).select(*cols)
     if persist_input:
         vals = scoped_persist(vals)
 
     v = F.col("__v")
-    # continuous-quantile anchor: h = (n-1)*p (0-based); target 1-based
-    # ranks floor(h)+1 and ceil(h)+1, blended by frac = h - floor(h)
-    h = (F.col("__n") - F.lit(1)).cast("double") * F.lit(float(p))
-    lo_rank = (F.floor(h) + F.lit(1)).cast("long")
-    hi_rank = (F.ceil(h) + F.lit(1)).cast("long")
+    n = F.col("__n")  # the group's total mass
+    if weight is None:
+        h = (n - F.lit(1)).cast("double") * F.lit(float(p))
+        t_lo = (F.floor(h) + F.lit(1)).cast("long")
+        t_hi = (F.ceil(h) + F.lit(1)).cast("long")
+    else:
+        t_lo = t_hi = n * F.lit(p).cast("decimal(12,10)")
 
-    # ONE bracket pass — sign/exponent/mantissa buckets:
-    #   b = sign · ((2048 + floor(log2|v|)) · 256 + floor((m − 1) · 256)),
-    # m = |v| / 2^floor(log2|v|) ∈ [1, 2) — a data-independent,
-    # deterministic, MONOTONE partition of the double line into ≤ ~1.57M
-    # possible buckets (6k binades × 256 mantissa slices per sign), of
-    # which only populated ones materialize. Logarithmic-relative buckets
-    # need no prior [min, max] pass and cannot be stretched by outliers
-    # (the r12 equi-width collapse was an ABSOLUTE-width artifact: its
-    # 21k-wide bucket at range ±11M is 2^-8-RELATIVE here, i.e. the
-    # bracket narrows to values agreeing with the target through 8
-    # significand bits). FP rounding at binade edges can push a bucket
-    # index ±1 — harmless: the mapping stays non-decreasing, which is the
-    # only property the rank arithmetic uses, and the bracket's [a, b]
-    # are OBSERVED data values. ±inf and NaN take sentinel buckets beyond
-    # every finite one (NaN above +inf: Spark orders NaN largest).
+    def covers(start, end, lo, hi):
+        # the mass run (start, end] reaches target lo and does not lie
+        # past target hi; a target of 0 (weighted p = 0) names the first
+        # value, whose run starts at 0
+        return ((start < hi) | (start == F.lit(0))) & (end >= lo)
+
+    # bucket b = sign · ((2048 + floor(log2|v|)) · 256 + floor((m − 1) · 256)),
+    # m = |v| / 2^floor(log2|v|) ∈ [1, 2): a data-independent, MONOTONE
+    # partition of the double line (6k binades × 256 mantissa slices per
+    # sign, only populated ones materialize). Relative-width buckets need
+    # no [min, max] pass and cannot be stretched by outliers: the bracket
+    # narrows to values agreeing with the target through 8 significand
+    # bits. FP rounding at binade edges can move an index by ±1 without
+    # breaking monotonicity, the only property the rank arithmetic uses.
+    # ±inf and NaN take sentinel buckets (NaN above +inf: Spark orders
+    # NaN largest).
     sentinel = 10_000_000
     exp = F.floor(F.log2(F.abs(v)))
     mant = F.abs(v) / F.pow(F.lit(2.0), exp)  # division: subnormal-safe
@@ -222,72 +150,60 @@ def exact_quantile_by_group(
         .otherwise((F.signum(v) * mag).cast("long"))
     )
 
+    wg = Window.partitionBy("__g")
     w_cum = (
         Window.partitionBy("__g")
         .orderBy("__bk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    h1 = (
-        vals.select("__g", "__v", bucket.alias("__bk"))
+    hist = (
+        vals.withColumn("__bk", bucket)
         .groupBy("__g", "__bk")
         .agg(
-            F.count("*").alias("__cnt"),
+            mass.alias("__cnt"),
             F.min("__v").alias("__mn"),
             F.max("__v").alias("__mx"),
         )
-        .withColumn("__n", F.sum("__cnt").over(Window.partitionBy("__g")))
+        .withColumn("__n", F.sum("__cnt").over(wg))
         .withColumn(
             "__start", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0))
         )
     )
-    # a bucket covers global 1-based ranks (__start, __start + __cnt];
-    # the bracket is the (≤2-bucket) span covering [lo_rank, hi_rank],
-    # with [a, b] its observed value bounds — n falls out of the same
-    # pass, so the histogram scan and the band scan below are the ONLY
-    # passes over the input (same count as the retired GK form, with
-    # every operator codegen)
-    g = (
-        h1.filter(
-            (F.col("__start") < hi_rank)
-            & ((F.col("__start") + F.col("__cnt")) >= lo_rank)
-        )
-        .groupBy("__g")
-        .agg(
-            F.first("__n").alias("__n"),
-            F.min("__mn").alias("__a"),
-            F.max("__mx").alias("__b"),
-        )
-    )
+    start = F.col("__start")
+    bracket = hist.filter(covers(start, start + F.col("__cnt"), t_lo, t_hi))
+    bounds = [
+        F.first("__n").alias("__n"),
+        F.min("__mn").alias("__a"),
+        F.max("__mx").alias("__b"),
+    ]
+    if keys:
+        band = vals.join(bracket.groupBy("__g").agg(*bounds), "__g")
+    else:
+        # one group: an equi-join on the constant key would fold into a
+        # CartesianProduct; a keys=[] aggregate is provably one row, so
+        # the bracket joins as a broadcast scalar instead
+        band = vals.crossJoin(F.broadcast(bracket.agg(*bounds)))
 
-    # band selection in ONE scan (r13, verbatim): tag each row
-    # below(-1)/inside(0)/above(+1) the group's bracket and collapse to
-    # (tag, value) cells, keeping only in-band values — below-band rows
-    # merge into a single counter cell per group (their values don't
-    # matter, only how many rank positions they occupy), above-band rows
-    # are dropped at the aggregate.
-    tag = F.when(F.col("__v") < F.col("__a"), F.lit(-1)).when(
-        F.col("__v") > F.col("__b"), F.lit(1)
+    tag = F.when(v < F.col("__a"), F.lit(-1)).when(
+        v > F.col("__b"), F.lit(1)
     ).otherwise(F.lit(0))
-    cells_all = (
-        vals.join(g, "__g")
-        .select(
-            "__g",
-            "__n",
-            tag.alias("__t"),
-            F.when(tag == 0, F.col("__v")).alias("__cv"),
-        )
+    cells = (
+        band.withColumn("__t", tag)
         .filter(F.col("__t") <= 0)
+        .withColumn("__cv", F.when(F.col("__t") == 0, v))
         .groupBy("__g", "__t", "__cv")
-        .agg(F.count("*").alias("__c"), F.first("__n").alias("__n"))
+        .agg(mass.alias("__c"), F.first("__n").alias("__n"))
     )
-    wg = Window.partitionBy("__g")
-    win = (
+    w_cells = (
         Window.partitionBy("__g")
         .orderBy("__cv")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    pos_lo = F.col("__below") + F.coalesce(
+        F.sum("__c").over(w_cells), F.lit(0)
+    )
     positioned = (
-        cells_all.withColumn(
+        cells.withColumn(
             "__below",
             F.coalesce(
                 F.sum(F.when(F.col("__t") == -1, F.col("__c"))).over(wg),
@@ -295,258 +211,38 @@ def exact_quantile_by_group(
             ),
         )
         .filter(F.col("__t") == 0)
-        .withColumn(
-            "__cum_before", F.coalesce(F.sum("__c").over(win), F.lit(0))
-        )
-        .withColumn("__pos_lo", F.col("__below") + F.col("__cum_before"))
-        .withColumn(
-            "__pos_hi", F.col("__below") + F.col("__cum_before") + F.col("__c")
-        )
-        .withColumn("__v", F.col("__cv"))
+        .withColumn("__pos_lo", pos_lo)
+        .withColumn("__pos_hi", F.col("__pos_lo") + F.col("__c"))
     )
-    # a cell covers global 1-based ranks (__pos_lo, __pos_hi]
+
+    def pick(t):
+        return F.min(
+            F.when(
+                covers(F.col("__pos_lo"), F.col("__pos_hi"), t, t),
+                F.col("__cv"),
+            )
+        )
+
     stats = positioned.groupBy("__g").agg(
-        F.max(
-            F.when(
-                (lo_rank > F.col("__pos_lo")) & (lo_rank <= F.col("__pos_hi")),
-                F.col("__v"),
-            )
-        ).alias("__vlo"),
-        F.max(
-            F.when(
-                (hi_rank > F.col("__pos_lo")) & (hi_rank <= F.col("__pos_hi")),
-                F.col("__v"),
-            )
-        ).alias("__vhi"),
+        pick(t_lo).alias("__vlo"),
+        pick(t_hi).alias("__vhi"),
         F.first("__n").alias("__n"),
     )
+    vlo, vhi = F.col("__vlo"), F.col("__vhi")
+    value = vlo if weight is not None else vlo + (h - F.floor(h)) * (vhi - vlo)
     guarded = stats.select(
         "__g",
         F.when(
             F.assert_true(
-                F.col("__vlo").isNotNull() & F.col("__vhi").isNotNull(),
+                vlo.isNotNull() & vhi.isNotNull(),
                 F.lit(
                     "exact_quantile_by_group: histogram bracket missed "
                     "the target rank — bracket invariant broken"
                 ),
             ).isNull(),
-            F.col("__vlo")
-            + (h - F.floor(h)) * (F.col("__vhi") - F.col("__vlo")),
+            value,
         ).alias(out),
     )
-    # LAZY materialization (r14): scoped_persist bounds nested callers'
-    # plans with an InMemoryRelation leaf exactly like the old eager
-    # localCheckpoint did, but the selection now FUSES into the caller's
-    # action instead of paying its own build-time job — the caches
-    # materialize inline on first read (the r13 PCA lesson), twin calls
-    # over the same input share their histogram exchanges via
-    # ReuseExchange, and builders become action-free here.
     return scoped_persist(
         guarded.select(*[F.col(f"__g.{k}").alias(k) for k in keys], out)
     )
-
-
-
-def weighted_quantile_by_group(
-    df: DataFrame,
-    keys: list[str],
-    col: str,
-    weight_col: str,
-    out: str,
-    *,
-    p: float = 0.5,
-    buckets: int = 1024,
-    max_cell_values: int = 100_000,
-    max_rounds: int = 12,
-    persist_input: bool = True,
-) -> DataFrame:
-    """Per-group EXACT WEIGHTED quantile: the smallest value v whose
-    cumulative weight reaches p x (group's total weight) — the
-    inverted-CDF convention (numpy's `method='inverted_cdf'` with
-    weights; the weighted median at p=0.5). Rows with NULL value, NULL
-    weight, or weight <= 0 are ignored.
-
-    Weighted ranks have no GK sketch (percentile_approx is frequency-1
-    only), so this uses the ITERATIVE range-narrowing selection: each
-    round buckets the in-range rows of every unresolved group into
-    `buckets` value-range cells, aggregates each cell's weight, exact
-    [min, max] and an approx distinct-value count, locates the target
-    cell with a cumulative-weight window (cell-sized, <= `buckets` rows
-    per group), and narrows to that cell's observed [min, max] — so an
-    outlier-stretched or heavy-tailed distribution re-buckets against
-    its own sub-range instead of degenerating (the round-13 advisory
-    fix, applied here from birth). A cell that collapses to one value
-    (min == max) IS the answer regardless of its weight — billion-row
-    tie runs resolve without any sort. The loop is driver-paced
-    (bounded 1-row probes, like dedup/components.py's convergence
-    check) and exits once every unresolved cell holds <= `max_cell_values`
-    distinct values (approx count — a sizing heuristic only, never a
-    correctness input); the finale tie-collapses those cells to
-    (value, weight) rows and takes the first value whose running weight
-    crosses the target. `max_rounds` overruns raise loudly.
-
-    Cross-engine determinism: weights are summed as decimal(38,6) —
-    EXACT, order-independent — so the boundary comparison
-    cum_weight >= p*W cannot flip on float summation order between this
-    plan and a DuckDB window oracle. Use p values exactly representable
-    in decimal(12,10) (0.5, 0.25, 0.9, ...), which covers any p a query
-    would write literally.
-
-    At 100 TB: every pass is a map-side-combined aggregate; shuffles
-    carry per-cell rows (<= buckets x groups) except the finale's
-    (value, weight) collapse, bounded by max_cell_values per group.
-    """
-    if not 0.0 <= p <= 1.0:
-        raise ValueError(f"quantile p must be in [0,1], got {p}")
-    from sri_spark.operators.caching import scoped_persist
-
-    w_dec = F.col(weight_col).cast("decimal(38,6)")
-    vals = (
-        df.filter(
-            F.col(col).isNotNull()
-            & F.col(weight_col).isNotNull()
-            & (F.col(weight_col) > 0)
-        )
-        .select(
-            F.struct(*[F.col(k) for k in keys]).alias("__g"),
-            F.col(col).cast("double").alias("__v"),
-            w_dec.alias("__w"),
-        )
-    )
-    if persist_input:
-        vals = scoped_persist(vals)
-
-    p_dec = F.lit(p).cast("decimal(12,10)")
-    g0 = vals.groupBy("__g").agg(
-        F.min("__v").alias("__lo"),
-        F.max("__v").alias("__hi"),
-        F.sum("__w").alias("__W"),
-        F.approx_count_distinct("__v").alias("__nd"),
-    )
-    state = g0.select(
-        "__g",
-        "__lo",
-        "__hi",
-        (F.col("__W") * p_dec).alias("__t"),
-        F.lit(0).cast("decimal(38,6)").alias("__below"),
-        F.when(F.col("__lo") == F.col("__hi"), F.col("__lo"))
-        .when(F.lit(p == 0.0), F.col("__lo"))
-        .alias("__val"),
-        F.col("__nd"),
-    ).localCheckpoint()
-    maxnd = (
-        state.filter(F.col("__val").isNull()).agg(F.max("__nd")).first()[0]
-    )
-
-    rounds = 0
-    while maxnd is not None and maxnd > max_cell_values:
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"weighted_quantile_by_group: a target cell still holds "
-                f"~{maxnd} distinct values after {max_rounds} narrowing "
-                f"rounds (buckets={buckets}, "
-                f"max_cell_values={max_cell_values}) — raise the knobs "
-                "for this distribution"
-            )
-        rounds += 1
-        active = state.filter(F.col("__val").isNull()).drop("__val", "__nd")
-        rows = vals.join(F.broadcast(active), "__g").filter(
-            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
-        )
-        span = F.col("__hi") - F.col("__lo")
-        bid = F.greatest(
-            F.lit(0).cast("long"),
-            F.least(
-                F.lit(buckets - 1).cast("long"),
-                F.floor((F.col("__v") - F.col("__lo")) / span * buckets).cast(
-                    "long"
-                ),
-            ),
-        )
-        cells = (
-            rows.select(
-                "__g", "__t", "__below", bid.alias("__b"), "__v", "__w"
-            )
-            .groupBy("__g", "__t", "__below", "__b")
-            .agg(
-                F.sum("__w").alias("__cw"),
-                F.min("__v").alias("__cmn"),
-                F.max("__v").alias("__cmx"),
-                F.approx_count_distinct("__v").alias("__nd"),
-            )
-        )
-        win = (
-            Window.partitionBy("__g")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        end_cum = F.col("__below") + F.col("__cum_before") + F.col("__cw")
-        start_cum = F.col("__below") + F.col("__cum_before")
-        narrowed = (
-            cells.withColumn(
-                "__cum_before",
-                F.coalesce(
-                    F.sum("__cw").over(win), F.lit(0).cast("decimal(38,6)")
-                ),
-            )
-            # first cell whose END cumulative weight reaches the target
-            # (start < t <= end); p == 0 resolved at init, so t > 0 here
-            .filter((start_cum < F.col("__t")) & (F.col("__t") <= end_cum))
-            .select(
-                "__g",
-                F.col("__cmn").alias("__lo"),
-                F.col("__cmx").alias("__hi"),
-                "__t",
-                start_cum.alias("__below"),
-                F.when(F.col("__cmn") == F.col("__cmx"), F.col("__cmn")).alias(
-                    "__val"
-                ),
-                F.col("__nd"),
-            )
-        )
-        new_state = (
-            state.filter(F.col("__val").isNotNull())
-            .unionByName(narrowed)
-            .localCheckpoint()
-        )
-        maxnd = (
-            new_state.filter(F.col("__val").isNull())
-            .agg(F.max("__nd"))
-            .first()[0]
-        )
-        state.unpersist()
-        state = new_state
-
-    unresolved = state.filter(F.col("__val").isNull()).drop("__val", "__nd")
-    finale_cells = (
-        vals.join(F.broadcast(unresolved), "__g")
-        .filter(
-            (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
-        )
-        .groupBy("__g", "__t", "__below", "__v")
-        .agg(F.sum("__w").alias("__cw"))
-    )
-    vwin = (
-        Window.partitionBy("__g")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    picked = (
-        finale_cells.withColumn("__cum", F.sum("__cw").over(vwin))
-        .groupBy("__g")
-        .agg(
-            F.min(
-                F.when(
-                    F.col("__below") + F.col("__cum") >= F.col("__t"),
-                    F.col("__v"),
-                )
-            ).alias("__val")
-        )
-    )
-    allvals = state.filter(F.col("__val").isNotNull()).select(
-        "__g", "__val"
-    ).unionByName(picked)
-    return allvals.select(
-        *[F.col(f"__g.{k}").alias(k) for k in keys],
-        F.col("__val").alias(out),
-    ).localCheckpoint()

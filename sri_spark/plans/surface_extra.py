@@ -73,16 +73,14 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_group_scalable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-group quantiles via the SCALE path —
-    operators/median.py::exact_quantile_by_group (round-12 verdict item
-    8). `agg_percentiles` above uses Spark's built-in exact `percentile`,
-    whose per-task value→count map OOMs on high-distinct columns (it
-    OOM'd a 1 GiB session at 2.4M distinct doubles, round 12); this
-    operator answers the same question in one codegen pass over the raw
-    rows (tie-collapse to (group, value, count) cells) plus a narrow
-    range-partitioned distributed rank over the cells, so it survives
-    columns whose per-group distinct count is data-sized — no per-task
-    value map, no imperative sketch aggregate (r14). Same quantile_cont
-    oracle."""
+    operators/median.py::exact_quantile_by_group. `agg_percentiles` above
+    uses Spark's built-in exact `percentile`, whose per-task value→count
+    map OOMs on high-distinct columns (it OOM'd a 1 GiB session at 2.4M
+    distinct doubles); this operator brackets each target rank with a
+    codegen exponent-bucket histogram and resolves it from the
+    tie-collapsed rows inside the bracket, so it survives columns whose
+    per-group distinct count is data-sized — no per-task value map, no
+    imperative sketch aggregate. Same quantile_cont oracle."""
     from sri_spark.operators.median import exact_quantile_by_group
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -122,23 +120,24 @@ def agg_group_scalable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-WEIGHTED median line price per return flag — the
-    inverted-CDF weighted median via
-    operators/median.py::weighted_quantile_by_group. The oracle's window
-    formulation sorts every row per group; the operator's iterative
-    range-narrowing touches only cell aggregates (decimal-exact weight
-    sums, so the cum_weight >= p*W boundary cannot flip on float
-    summation order between engines). The weighted shape is what a
-    training-corpus budget stage needs (median quality weighted by token
-    count) where per-document weights make quantile_cont unusable."""
-    from sri_spark.operators.median import weighted_quantile_by_group
+    inverted-CDF weighted median via the weighted mode of
+    operators/median.py::exact_quantile_by_group. The oracle's window
+    formulation sorts every row per group; the operator sums weights per
+    histogram bucket to bracket the target and sorts only the
+    tie-collapsed cells inside the bracket (decimal-exact weight sums, so
+    the cum_weight >= p*W boundary cannot flip on float summation order
+    between engines). The weighted shape is what a training-corpus
+    budget stage needs (median quality weighted by token count) where
+    per-document weights make quantile_cont unusable."""
+    from sri_spark.operators.median import exact_quantile_by_group
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.col("l_extendedprice").cast("double").alias("precio"),
         F.col("l_quantity").alias("cantidad"),
     )
-    med = weighted_quantile_by_group(
-        li, ["flag"], "precio", "cantidad", "med_raw", p=0.5
+    med = exact_quantile_by_group(
+        li, ["flag"], "precio", "med_raw", p=0.5, weight="cantidad"
     )
     return med.select(
         "flag", F.round("med_raw", 4).alias("mediana_ponderada")

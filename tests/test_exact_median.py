@@ -12,12 +12,12 @@ import pytest
 from sri_spark.operators.median import exact_median_1row
 
 
-def _med(spark, values, buckets=1024):
+def _med(spark, values):
     df = spark.createDataFrame([(float(v),) if v is not None else (None,)
                                 for v in values] or [(None,)], "v double")
     if not values:
         df = df.limit(0)
-    return exact_median_1row(df, "v", "med", buckets=buckets).first()["med"]
+    return exact_median_1row(df, "v", "med").first()["med"]
 
 
 def test_median_matches_numpy_on_random_data(spark):
@@ -52,15 +52,15 @@ def test_median_ignores_nulls_and_handles_empty(spark):
 
 
 def test_median_tiny_bucket_count_still_exact(spark):
-    # buckets=2 forces multi-row buckets and the cross-bucket position
-    # bookkeeping; the result must not depend on the bucket count
+    # a uniform sample crossing zero packs several rows into each bucket and
+    # splits them across negative and positive buckets that share one rank
+    # order; the cross-bucket position bookkeeping must still land exactly
     rng = np.random.default_rng(7)
     vals = rng.uniform(-5, 5, size=200).round(4).tolist()
-    assert _med(spark, vals, buckets=2) == pytest.approx(
-        float(np.median(vals)), abs=1e-12
-    )
-    assert _med(spark, vals, buckets=3) == pytest.approx(
-        float(np.median(vals)), abs=1e-12
+    assert _med(spark, vals) == pytest.approx(float(np.median(vals)), abs=1e-12)
+    # odd count: the median is one row, not an interpolated pair
+    assert _med(spark, vals[:199]) == pytest.approx(
+        float(np.median(vals[:199])), abs=1e-12
     )
 
 
@@ -130,14 +130,14 @@ def test_grouped_quantile_rejects_bad_p(spark):
 
 
 # ---------------------------------------------------------------------------
-# weighted form: weighted_quantile_by_group (inverted-CDF convention)
+# weighted form: exact_quantile_by_group(weight=...) (inverted-CDF convention)
 # ---------------------------------------------------------------------------
 
-def _wq(spark, rows, p, **kw):
-    from sri_spark.operators.median import weighted_quantile_by_group
+def _wq(spark, rows, p):
+    from sri_spark.operators.median import exact_quantile_by_group
 
     df = spark.createDataFrame(rows, "k string, v double, w double")
-    res = weighted_quantile_by_group(df, ["k"], "v", "w", "q", p=p, **kw)
+    res = exact_quantile_by_group(df, ["k"], "v", "q", p=p, weight="w")
     return {r["k"]: r["q"] for r in res.collect()}
 
 
@@ -161,6 +161,10 @@ def test_weighted_median_matches_inverted_cdf(spark):
             np.concatenate([[1e13], rng.normal(size=2_000)]),
             np.ones(2_001),
         ),
+        # NULL key: null-safe struct keys on the weighted path
+        None: (rng.normal(size=50), rng.uniform(0.5, 2, 50).round(3)),
+        # cumulative weight hits p·W exactly (p=0.5 -> 2, p=0.25 -> 1)
+        "edge": (np.arange(1.0, 5.0), np.ones(4)),
     }
     rows = [
         (k, float(v), float(w))
@@ -168,20 +172,20 @@ def test_weighted_median_matches_inverted_cdf(spark):
         for v, w in zip(vs, ws)
     ]
     for p in (0.5, 0.9, 0.25):
-        got = _wq(spark, rows, p, buckets=64, max_cell_values=200)
+        got = _wq(spark, rows, p)
         for k, (vs, ws) in groups.items():
             assert got[k] == _np_weighted(vs, ws, p), (p, k)
 
 
 def test_weighted_median_tie_run_resolves_without_sort(spark):
-    """A dominant tie run must resolve via the cell min == max shortcut
-    (the narrowing loop can never shrink it) — and its value must win
-    whenever the target weight lands inside the run."""
+    """A dominant tie run collapses to ONE band cell (no sort of its
+    rows), and its value must win whenever the target weight lands
+    inside the run."""
     rows = (
         [("t", 7.0, 5.0)] * 10_000
         + [("t", 0.0, 1.0), ("t", 99.0, 1.0)]
     )
-    assert _wq(spark, rows, 0.5, buckets=8, max_cell_values=10)["t"] == 7.0
+    assert _wq(spark, rows, 0.5)["t"] == 7.0
 
 
 def test_weighted_median_ignores_nonpositive_weights(spark):

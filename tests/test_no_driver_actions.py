@@ -37,7 +37,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # builder -> why an action during construction is the algorithm, not a leak
 ITERATIVE_OK = {
-    "agg_weighted_median_price": "weighted-quantile range narrowing: driver-paced rounds read ONE max(nd) scalar each (operators/median.py::weighted_quantile_by_group — weighted ranks have no GK sketch, so the loop cannot be expressed lazily)",
     "corpus_pack_sequences": "two-phase packing: phase-1 per-partition offsets (one row per partition)",
     "dedup_cluster_keep_best": "connected-components fixpoint convergence checks",
     "dedup_cluster_size_histogram": "connected-components fixpoint convergence checks",
